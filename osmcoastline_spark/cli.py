@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from osmcoastline_spark.plans.pipeline import Options, run_pipeline
     from osmcoastline_spark.session import get_spark
-    from osmcoastline_spark.sinks import CheckpointSink
+    from osmcoastline_spark.sinks import CheckpointSink, commit_tables
 
     import os as _os
 
@@ -159,21 +159,12 @@ def main(argv: list[str] | None = None) -> int:
         res = run_pipeline(spark, nodes, ways, opt)
 
         sink = CheckpointSink(args.output_database)
-        # epsg=3857 geometry carries metre-valued envelopes — the z-order
-        # layout needs the WebMercator extent or every positive centre
-        # clamps to one Morton cell (sinks.py docstring)
-        from osmcoastline_spark.geom import MERC
-
-        extent = (-MERC, MERC, -MERC, MERC) if args.srs == 3857 else None
-        for name, df in res.tables.items():
-            if name == "segments":
-                continue
-            sink.write(
-                name,
-                df,
-                spatial=name in ("land_polygons", "water_polygons", "rings"),
-                extent=extent,
-            )
+        commit_tables(
+            sink,
+            {name: df for name, df in res.tables.items() if name != "segments"},
+            spatial=("land_polygons", "water_polygons", "rings"),
+            epsg=args.srs,
+        )
         sink.write_meta(res.stats, vars(args))
 
         print(f"There were {res.warnings} warnings.")
@@ -183,11 +174,11 @@ def main(argv: list[str] | None = None) -> int:
             code = 0
     finally:
         if res is not None:
-            # release the pipeline's pinned caches (error points/lines,
-            # dup counts) — an in-process caller with a pre-existing
-            # session would otherwise accumulate them per run, since
-            # spark.stop() below is skipped for pre-existing sessions
-            # (same idiom as _segments_main)
+            # release the pipeline's pinned caches (dup counts) — an
+            # in-process caller with a pre-existing session would
+            # otherwise accumulate them per run, since spark.stop() below
+            # is skipped for pre-existing sessions (same idiom as
+            # _segments_main)
             res.unpersist()
         # restore even when run_pipeline raises, so an in-process caller's
         # later runs are not silently verbose

@@ -215,13 +215,10 @@ def close_rings(
     that are now closed have first==last node id.
     """
     spark = open_rings.sparkSession
-    # ONE endpoint pass: the old count()-then-collect() evaluated the
-    # endpoint projection twice (two driver-floor jobs); collecting first
-    # and checking len() gives the same loud-fail for one pass. The rows
-    # are endpoint-only (~60 B/ring); a pathological input beyond the cap
-    # still fails loudly BEFORE driver memory is at risk because collect()
-    # is bounded by spark.driver.maxResultSize (default 1 GB ≈ 16M
-    # endpoint rows >> the 1M cap) with its own named error.
+    # ONE endpoint pass (a count()-then-collect() evaluates the endpoint
+    # projection twice), bounded at cap+1 rows: an input beyond the cap
+    # fails loudly after transferring at most cap+1 endpoint rows
+    # (~60 B/ring), never the whole set.
     rows = open_rings.select(
         "ring_id",
         F.element_at("node_ids", 1).alias("first_id"),
@@ -231,30 +228,17 @@ def close_rings(
         F.element_at("xs", -1).alias("lx"),
         F.element_at("ys", -1).alias("ly"),
         "nways",
-    ).collect()
+    ).limit(max_driver_endpoints + 1).collect()
     n = len(rows)
     if n == 0:
         return open_rings, CloseResult([], [], [], [], 0, 0)
     if n > max_driver_endpoints:
         raise RuntimeError(
-            f"{n} open rings exceed max_driver_endpoints={max_driver_endpoints}; "
+            f"more than max_driver_endpoints={max_driver_endpoints} open rings; "
             "input data quality is pathological"
         )
 
-    eps = [
-        {
-            "ring_id": r["ring_id"],
-            "first_id": r["first_id"],
-            "last_id": r["last_id"],
-            "fx": r["fx"],
-            "fy": r["fy"],
-            "lx": r["lx"],
-            "ly": r["ly"],
-            "nways": r["nways"],
-        }
-        for r in rows
-    ]
-    res = plan_close_rings(eps, max_distance)
+    res = plan_close_rings([r.asDict() for r in rows], max_distance)
 
     from osmcoastline_spark.operators.merge_apply import apply_merge_plan
 

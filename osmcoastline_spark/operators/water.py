@@ -145,12 +145,13 @@ def water_polygons(
         # and covered_area2 double-counts the band. Clipping every piece
         # to its OWNED region box (split.py lineage: the un-expanded
         # midline cuts) restores a disjoint land cover; rows without the
-        # lineage (no-split path) clip to the tile alone as before.
+        # lineage (no-split path) clip to the tile alone as before. The
+        # row is indexed directly: an unexpected row type must raise, not
+        # silently drop the clip and bring the seam double-coverage back.
         for row in parts:
             cminx, cminy, cmaxx, cmaxy = tminx, tminy, tmaxx, tmaxy
-            own_minx = row.get("own_minx") if isinstance(row, dict) else None
-            if own_minx is not None:
-                cminx = max(cminx, float(own_minx))
+            if clip_owned:
+                cminx = max(cminx, float(row["own_minx"]))
                 cminy = max(cminy, float(row["own_miny"]))
                 cmaxx = min(cmaxx, float(row["own_maxx"]))
                 cmaxy = min(cmaxy, float(row["own_maxy"]))
@@ -204,6 +205,7 @@ def water_polygons(
         )
         if c in covered.columns
     ]
+    clip_owned = "own_minx" in part_fields
     grouped = covered.groupBy("cell").agg(
         F.sort_array(F.collect_list(F.struct(*part_fields))).alias("parts")
     )

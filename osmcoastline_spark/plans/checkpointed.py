@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from osmcoastline_spark.plans.pipeline import Options, PipelineResult, run_pipeline
-from osmcoastline_spark.sinks import CheckpointSink
+from osmcoastline_spark.sinks import CheckpointSink, commit_tables
 
 FINAL_TABLES = [
     "land_polygons",
@@ -151,25 +151,20 @@ def run_checkpointed(
             else []
         )
     run.result = res2
-    from osmcoastline_spark.geom import MERC
-
-    extent = (-MERC, MERC, -MERC, MERC) if opt.epsg == 3857 else None
-    for t in wanted:
-        if t in res2.tables:
-            n = sink.write(
-                t,
-                res2.tables[t],
-                spatial=t in ("land_polygons", "water_polygons"),
-                lineage={"stage": t, "options": str(opt), "fingerprint": fp},
-                extent=extent,
-            )
-            run.committed.append((t, n))
+    rows = commit_tables(
+        sink,
+        {t: res2.tables[t] for t in wanted if t in res2.tables},
+        spatial=("land_polygons", "water_polygons"),
+        epsg=opt.epsg,
+        lineage=lambda t: {"stage": t, "options": str(opt), "fingerprint": fp},
+    )
+    run.committed.extend(rows.items())
     # the meta marker commits LAST, carries the fingerprint, and is only
-    # written when THIS run committed the full wanted set: a crash
-    # mid-write leaves no marker and the next run recomputes (no torn
-    # resume), and an early-abort run (e.g. missing locations — no tables
-    # produced) must not overwrite a complete prior run's marker with its
-    # own errors
+    # written when THIS run committed the full wanted set: a failed commit
+    # raises above and a crash mid-commit leaves no marker, so the next run
+    # recomputes (no torn resume), and an early-abort run (e.g. missing
+    # locations — no tables produced) must not overwrite a complete prior
+    # run's marker with its own errors
     if all(t in res2.tables for t in wanted):
         sink.write(
             "_meta_done",

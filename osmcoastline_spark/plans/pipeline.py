@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -55,7 +56,7 @@ from osmcoastline_spark.operators.questionable import questionable_rings
 from osmcoastline_spark.operators.rings import assemble_rings, route_rings
 from osmcoastline_spark.operators.split import split_polygons
 from osmcoastline_spark.operators.water import drop_antimeridian_slivers, water_polygons
-from osmcoastline_spark.util import run_concurrently
+from osmcoastline_spark.util import TaggedPool, run_concurrently
 from osmcoastline_spark.schemas import (
     DEFAULT_BBOX_OVERLAP_3857,
     DEFAULT_BBOX_OVERLAP_4326,
@@ -125,30 +126,22 @@ def _empty(spark: SparkSession, schema):
     return spark.createDataFrame([], schema)
 
 
-# one shared driver thread for the overlapped error-category count (the
-# submit sites never queue more than one task per pipeline run)
-from concurrent.futures import ThreadPoolExecutor as _TPE
-
-_acct_pool = _TPE(max_workers=2)
-
-
-def _count_error_categories(error_points: list, error_lines: list) -> list:
-    """One pruned aggregate over both error-table union lineages: rows of
-    (kind 'p'|'l', error, count). Counting only touches the `error`
-    column, so Catalyst prunes every coordinate array out of the plan."""
-    ep = error_points[0]
-    for df in error_points[1:]:
-        ep = ep.unionByName(df)
-    el = error_lines[0]
-    for df in error_lines[1:]:
-        el = el.unionByName(df)
-    return (
+def _materialize_errors(error_points: list, error_lines: list) -> tuple:
+    """Check each error-table union out ONCE and count its categories off
+    the checkpoints: returns (points, lines, rows of (kind 'p'|'l', error,
+    count))."""
+    ep, el = (
+        reduce(lambda a, b: a.unionByName(b), frames).localCheckpoint(eager=True)
+        for frames in (error_points, error_lines)
+    )
+    counts = (
         ep.select(F.lit("p").alias("kind"), "error")
         .unionByName(el.select(F.lit("l").alias("kind"), "error"))
         .groupBy("kind", "error")
         .count()
         .collect()
     )
+    return ep, el, counts
 
 
 def _transform_polygons_3857(polys: DataFrame) -> DataFrame:
@@ -264,11 +257,22 @@ def run_pipeline(
     bucket-hashed source tables (sources.tables.write_bucketed — refs are
     the already-coastline-filtered exploded (way_id, pos, node_id) rows)
     so the planet-sized node side joins with ZERO shuffle; `ways`/`nodes`
-    args are then only used for the tagged-node error scan."""
+    args are then only used for the tagged-node error scan.
+
+    Background Spark work (the intersection checkpoint, the error tables)
+    runs on a pool scoped to this call: if the run raises, its jobs are
+    cancelled and joined before the exception propagates."""
+    with TaggedPool(spark.sparkContext, "osmcoastline-run", 2) as bg:
+        return _run(
+            spark, nodes, ways, options or Options(),
+            mid_sink, preassembled, prebucketed, bg,
+        )
+
+
+def _run(spark, nodes, ways, opt, mid_sink, preassembled, prebucketed, bg) -> PipelineResult:
     import time as _time
 
     t0 = _time.time()
-    opt = options or Options()
     res = PipelineResult()
 
     # env-gated stage trace (SPARK_GRAFT_TRACE=1): prints elapsed time
@@ -293,8 +297,7 @@ def run_pipeline(
 
     error_points = [tagged_node_errors(nodes)]
     error_lines = [_empty(spark, ERROR_LINES_SCHEMA)]
-    acct_future = None
-    acct_sig = None
+    err_future = None
 
     if preassembled is not None:
         closed, open_, pre_stats = preassembled
@@ -431,7 +434,7 @@ def run_pipeline(
     # segs/dup_counts; the result is joined right before its first
     # consumer. The 'intersection' error points slot into the error list
     # at this position (recorded index) so union order is unchanged.
-    ipairs_future = _acct_pool.submit(
+    ipairs_future = bg.submit(
         lambda: intersection_pairs(segs, opt.cell_deg).localCheckpoint(eager=True)
     )
     error_lines.append(overlaps)
@@ -774,15 +777,12 @@ def run_pipeline(
                     _trace("questionable_plan")
 
                 # error tables are COMPLETE here (split/check/water add
-                # warnings as ints, never error rows) — launch the
-                # accounting count in a driver thread so its wall time
-                # hides under the split + check_polygons actions below
-                # (round 6; the guard at the accounting site falls back to
-                # a synchronous count if a future edit appends later)
-                acct_sig = (len(error_points), len(error_lines))
-                acct_future = _acct_pool.submit(
-                    _count_error_categories, list(error_points), list(error_lines)
-                )
+                # warnings as ints, never error rows) — materialize them in
+                # a driver thread so their wall time hides under the split
+                # + check_polygons actions below; tuples make a later
+                # append fail loudly instead of going missing
+                error_points, error_lines = tuple(error_points), tuple(error_lines)
+                err_future = bg.submit(_materialize_errors, error_points, error_lines)
 
                 if opt.split_large_polygons and opt.max_points_in_polygon > 0:
                     polys = split_polygons(
@@ -873,33 +873,19 @@ def run_pipeline(
                     )
                     _trace("water_plan")
 
-    ep = error_points[0]
-    for df in error_points[1:]:
-        ep = ep.unionByName(df)
-    el = error_lines[0]
-    for df in error_lines[1:]:
-        el = el.unionByName(df)
-    # single-JOB warning accounting: the exit-code contract only needs the
-    # per-category COUNTS, and counting needs only the `error` column — so
-    # one union-of-projections aggregate covers both tables (round 6;
-    # previously two concurrent per-table count jobs whose ~18 AQE stage
-    # jobs dominated the accounting span at sf0.1). The count runs BEFORE
-    # persist() is registered so Catalyst prunes the coordinate arrays out
-    # of the counting plan (no cache substitution forces a full-row
-    # materialization); the persisted error tables then fill lazily on
-    # their first real consumer (sink write) — same total work for CLI
-    # runs, array-free accounting for everyone. When the polygon branch
-    # launched the count early (overlapped with split/check), reuse its
-    # result iff no error frame was appended since.
-    if acct_future is not None and acct_sig == (len(error_points), len(error_lines)):
-        counts = acct_future.result()
-    else:
-        counts = _count_error_categories(error_points, error_lines)
+    # each error table is materialized ONCE. A count-only accounting pass
+    # (pruned to the `error` column) plus a lazy persist() filled by the
+    # sink write ran the whole error lineage twice: on perfbench's
+    # coast-defects (local[4], 4 cores) 7.6 s / 16 jobs for the count, then
+    # 4.5 s / 16 jobs (error_lines) and 2.4 s / 3 jobs (error_points) again
+    # in the write.
+    # One eager checkpoint per table serves the warning counts (a small
+    # aggregate over the checkpoints) and makes each table write one scan.
+    ep, el, counts = (
+        err_future.result() if err_future else _materialize_errors(error_points, error_lines)
+    )
     epc = {r["error"]: r["count"] for r in counts if r["kind"] == "p"}
     elc = {r["error"]: r["count"] for r in counts if r["kind"] == "l"}
-    ep = ep.persist()
-    el = el.persist()
-    res.persisted += [ep, el]
     _trace("error_accounting")
     res.stats["overlaps"] = elc.get("overlap", 0)
     res.stats["intersections"] = epc.get("intersection", 0)

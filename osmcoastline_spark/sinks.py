@@ -6,6 +6,13 @@ no Iceberg runtime, so the same contract is implemented as parquet dirs plus
 an atomic `_MANIFEST.json` written *after* the data — a stage directory
 without a manifest is an uncommitted snapshot and is ignored on resume.
 
+Commit protocol for a run's output (`commit_tables`): every table is
+written concurrently, each by its own `sink.write`; a table's manifest
+lands only after its data, with the row count summed from the parquet
+footers of the files just written (no read-back job). The first failing
+write cancels the others and the commit raises; callers write the run
+marker (`meta.json`, `_meta_done`) last, only after every table committed.
+
 Spatial layout: geometry tables are written sorted by a Morton (Z-order)
 code of their envelope center — the Iceberg sort-order / metadata-pruning
 stand-in (reference's spatialite spatial index, output_database.cpp:241-256).
@@ -16,13 +23,54 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
+from concurrent.futures import as_completed
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmcoastline_spark.cells import morton_interleave_expr
+from osmcoastline_spark.geom import MERC
+from osmcoastline_spark.util import TaggedPool
 
 MANIFEST = "_MANIFEST.json"
+
+
+def _zorder(df: DataFrame, spatial: bool, extent) -> DataFrame:
+    """Sort each partition by the Morton code of the envelope center. The
+    helper column is dropped AFTER the sort: persisting it would give
+    resumed tables a different schema than fresh-run tables and than
+    manifest['schema']."""
+    if not spatial or not {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
+        return df
+    cx = (F.col("env_minx") + F.col("env_maxx")) / 2
+    cy = (F.col("env_miny") + F.col("env_maxy")) / 2
+    code = morton_interleave_expr(cx, cy, extent=extent or (-180.0, 180.0, -90.0, 90.0))
+    return df.withColumn("zorder", code).sortWithinPartitions("zorder").drop("zorder")
+
+
+def footer_rows(path: str) -> int:
+    """Exact row count of a parquet file or dataset directory, summed from
+    the file footers on the driver (no Spark job). Walks nested layouts and
+    skips the `_`/`.` names Spark's listing skips, so it equals
+    `spark.read.parquet(path).count()`; an unreadable data file raises."""
+    import pyarrow.parquet as pq
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        total += sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for f in files if not hidden(f)
+        )
+    return total
 
 
 class CheckpointSink:
@@ -45,24 +93,8 @@ class CheckpointSink:
         square or the metre-valued envelopes degenerate the Morton
         code and the spatial file layout is silently lost)."""
         path = self._dir(stage)
-        out = df
-        if spatial and {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
-            cx = (F.col("env_minx") + F.col("env_maxx")) / 2
-            cy = (F.col("env_miny") + F.col("env_maxy")) / 2
-            code = (
-                morton_interleave_expr(cx, cy, extent=extent)
-                if extent is not None
-                else morton_interleave_expr(cx, cy)
-            )
-            # drop the helper column AFTER the sort: it is layout-only,
-            # and persisting it would give resumed tables (and shipped
-            # output dirs) a different schema than fresh-run tables and
-            # than manifest['schema']
-            out = df.withColumn("zorder", code).sortWithinPartitions(
-                "zorder"
-            ).drop("zorder")
-        out.write.mode("overwrite").parquet(path)
-        n = df.sparkSession.read.parquet(path).count()
+        _zorder(df, spatial, extent).write.mode("overwrite").parquet(path)
+        n = footer_rows(path)
         manifest = {
             "stage": stage,
             "rows": n,
@@ -122,18 +154,6 @@ class IcebergSink:
     def write(self, stage: str, df: DataFrame, *, spatial: bool = False,
               lineage: dict | None = None,
               extent: tuple[float, float, float, float] | None = None) -> int:
-        out = df
-        if spatial and {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
-            cx = (F.col("env_minx") + F.col("env_maxx")) / 2
-            cy = (F.col("env_miny") + F.col("env_maxy")) / 2
-            code = (
-                morton_interleave_expr(cx, cy, extent=extent)
-                if extent is not None
-                else morton_interleave_expr(cx, cy)
-            )
-            out = df.withColumn("zorder", code).sortWithinPartitions(
-                "zorder"
-            ).drop("zorder")
         name = self._table(stage)
         # graft.lineage (which carries the resume fingerprint) rides the
         # SAME atomic snapshot commit via tableProperty — a crash between
@@ -145,7 +165,7 @@ class IcebergSink:
         # committed snapshot); losing them to a crash costs manifest()
         # accuracy, never resume safety.
         (
-            out.writeTo(name)
+            _zorder(df, spatial, extent).writeTo(name)
             .using("iceberg")
             .tableProperty("graft.lineage", json.dumps(lineage or {}))
             .createOrReplace()
@@ -199,3 +219,28 @@ def make_sink(spark: SparkSession, root: str):
     if catalog:
         return IcebergSink(spark, catalog)
     return CheckpointSink(root)
+
+
+def commit_tables(sink, tables: dict, *, spatial=(), epsg: int = 4326,
+                  lineage: Callable[[str], dict] | None = None) -> dict:
+    """Commit `tables` ({stage: DataFrame}) concurrently; returns {stage:
+    rows} in input order. Each table goes through `sink.write` (so subclass
+    overrides apply) on its own driver thread under one job tag: the first
+    failing write cancels the others' jobs, and the commit joins them and
+    re-raises. `spatial` names the Z-ordered tables (epsg=3857 geometry
+    needs the WebMercator extent, or its metre-valued envelopes clamp to
+    one Morton cell); `lineage(stage)` gives a manifest's lineage."""
+    if not tables:
+        return {}
+    sc = next(iter(tables.values())).sparkSession.sparkContext
+    extent = (-MERC, MERC, -MERC, MERC) if epsg == 3857 else None
+
+    def write(stage: str, df: DataFrame) -> int:
+        return sink.write(stage, df, spatial=stage in spatial, extent=extent,
+                          lineage=lineage(stage) if lineage else None)
+
+    with TaggedPool(sc, "osmcoastline-commit", len(tables)) as pool:
+        futures = {stage: pool.submit(write, stage, df) for stage, df in tables.items()}
+        for done in as_completed(futures.values()):
+            done.result()
+    return {stage: f.result() for stage, f in futures.items()}

@@ -20,6 +20,37 @@ def run_concurrently(*thunks: Callable):
         return [f.result() for f in futures]
 
 
+class TaggedPool:
+    """Driver threads whose Spark jobs all carry one job tag (thread-local
+    like a job group, but without replacing the group a caller set).
+    Leaving the `with` block joins every task; leaving it on an exception
+    first cancels the tag, so no job started here outlives the caller."""
+
+    def __init__(self, sc, prefix: str, max_workers: int):
+        import uuid
+
+        self.sc, self.tag = sc, f"{prefix}-{uuid.uuid4().hex}"
+        self._pool = ThreadPoolExecutor(max_workers=max_workers)
+
+    def submit(self, fn: Callable, *args):
+        def tagged():
+            self.sc.addJobTag(self.tag)
+            try:
+                return fn(*args)
+            finally:
+                self.sc.removeJobTag(self.tag)
+
+        return self._pool.submit(tagged)
+
+    def __enter__(self) -> "TaggedPool":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            self.sc.cancelJobsWithTag(self.tag)
+        self._pool.shutdown(wait=True, cancel_futures=exc_type is not None)
+
+
 def ensure_min_parallelism(df, factor: int = 2):
     """Repartition an under-parallel input before compute-heavy narrow
     stages (spark_optimization_guide §2.5: 'one huge unsplittable file …

@@ -403,3 +403,27 @@ def test_filter_planet_keeps_bogus_ways(spark):
     from osmcoastline_spark.operators.filter import coastline_ways
 
     assert coastline_ways(ways).count() == 0
+
+
+def test_close_rings_endpoint_cap(spark):
+    """More open rings than max_driver_endpoints fail loudly; the bounded
+    endpoint collect still closes an input at the cap."""
+    import pytest
+
+    from osmcoastline_spark.operators.close import close_rings
+
+    rows = [
+        (i, [10 * i, 10 * i + 1, 10 * i + 2], [float(i), i + 0.3, i + 0.6],
+         [0.0, 0.1, 0.0], 1, False, 10 * i)
+        for i in range(5)
+    ]
+    open_rings = spark.createDataFrame(
+        rows,
+        "ring_id long, node_ids array<long>, xs array<double>, ys array<double>, "
+        "nways int, fixed boolean, lead long",
+    ).repartition(3)
+    with pytest.raises(RuntimeError, match="more than max_driver_endpoints=3"):
+        close_rings(open_rings, 0.01, max_driver_endpoints=3)
+    merged, res = close_rings(open_rings, 0.01, max_driver_endpoints=5)
+    assert res.unconnected_nodes == 10  # every endpoint stays unconnected
+    assert merged.count() == 5
